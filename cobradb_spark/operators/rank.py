@@ -32,9 +32,11 @@ from pyspark.sql import functions as F
 #
 # RELEASE CONTRACT (round-4 ADVICE — this is module API, not an
 # implementation detail): every pin()/pin_cache() leaks a persisted
-# frame until release_rank_caches() runs.  The three harnesses
-# (__spark_entry__, tools/check.py, bench.py) call it after each query's
-# result is collected; any OTHER caller that materializes its result
+# frame until release_rank_caches() runs.  The harnesses tools/check.py,
+# bench.py, tools/bench_once.py, tools/op_sweep.py and
+# tools/scaling_probe.py call it after each query's result is collected;
+# __spark_entry__ does NOT, so in a session driven through it pinned
+# frames stay persisted.  Any caller that materializes its result
 # outside those harnesses must call release_rank_caches() itself once
 # the result is collected.  Guarded by a lock: the registry is shared
 # module state and query builds may race from multiple threads.
@@ -45,16 +47,12 @@ _PINNED_LOCK = threading.Lock()
 def pin(df: DataFrame) -> DataFrame:
     """Register an ALREADY-persisted frame for release_rank_caches().
 
-    For frames whose persist() happened inside an operator's own loop
-    (e.g. the surviving frame of an iterate-and-swap label propagation)
-    but must outlive the function until the caller collects."""
+    For frames persisted inside an operator (e.g. the range-partitioned
+    frame of the rank helpers below) that must outlive the function
+    until the caller collects."""
     with _PINNED_LOCK:
         _PINNED.append(df)
     return df
-
-
-# internal alias kept for the module's own helpers
-_pin = pin
 
 
 def pin_cache(df: DataFrame) -> DataFrame:
@@ -90,7 +88,7 @@ def global_rank_with_total(
     callers that need n (ntile, percent_rank, cume_dist) pay no extra
     action."""
     k = num_parts or max(df.sparkSession.sparkContext.defaultParallelism, 2)
-    tagged = _pin(
+    tagged = pin(
         df.repartitionByRange(k, *order_cols)
         .withColumn("_pid", F.spark_partition_id())
         .persist()
@@ -205,7 +203,7 @@ def global_prefix_sums(
     maps value_col -> grand total (the final prefix accumulator, free —
     callers needing the overall sum pay no extra action)."""
     k = num_parts or max(df.sparkSession.sparkContext.defaultParallelism, 2)
-    tagged = _pin(
+    tagged = pin(
         df.repartitionByRange(k, *order_cols)
         .withColumn("_pid", F.spark_partition_id())
         .persist()
@@ -289,7 +287,7 @@ def global_prefix_sum(
     unpersisted lineage (r8 ADVICE).
     """
     k = num_parts or max(df.sparkSession.sparkContext.defaultParallelism, 2)
-    tagged = _pin(
+    tagged = pin(
         df.repartitionByRange(k, *order_cols)
         .withColumn("_pid", F.spark_partition_id())
         .persist()

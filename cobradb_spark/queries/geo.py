@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cobradb_spark.io import load_table
+from cobradb_spark.operators.cc import min_label_components
 from cobradb_spark.registry import register
 
 # Radius (planar degrees) and grid cell size.  Cell == R, so the 3x3
@@ -595,7 +596,9 @@ LEFT JOIN border b ON b.id = n.id
     "with the same 3x3-cell equi-join as the radius family (never a "
     "cross join — a point's eps-ball can only intersect its 9 grid "
     "cells); clusters are the connected components of the core-core "
-    "eps-graph, computed by hash-min label propagation to fixpoint "
+    "eps-graph, computed by the shared operators/cc.py hash-min "
+    "label propagation (no path halving: clump geometry bounds the "
+    "diameter) "
     "(cluster id = min core key, so labels are order-independent — the "
     "one deliberate deviation from scan-order DBSCAN, whose border "
     "assignment depends on visit order: here a border point joins the "
@@ -604,8 +607,8 @@ LEFT JOIN border b ON b.id = n.id
     "generation + recursive-CTE reachability.  Scale: the pair join "
     "partitions by cell key (dense-cell skew = AQE skew-join case); "
     "label propagation shuffles only the core-edge list per round with "
-    "localCheckpoint'd frontiers; component diameter is bounded by the "
-    "clump geometry, and rounds stop at convergence.",
+    "localCheckpoint'd labels, and the round cap raises instead of "
+    "stopping unconverged.",
     tags=("geo", "graph"),
 )
 def geo_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -642,7 +645,7 @@ def geo_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("alon") - F.col("blon")
     ) * (F.col("alon") - F.col("blon"))
     # localCheckpoint (eager), not persist: the iterative-lineage
-    # discipline from graph.py — each round must not re-analyze the
+    # discipline from operators/cc.py — each round must not re-analyze the
     # grid-join subtree, and the label plan must not grow per round.
     pairs = (
         px.join(b, (F.col("jla") == F.col("bla")) & (F.col("jlo") == F.col("blo")))
@@ -659,42 +662,10 @@ def geo_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     ce = (
         pairs.join(core.withColumnRenamed("id", "src"), "src")
         .join(core.withColumnRenamed("id", "dst"), "dst")
-        .select("src", "dst")
-        .localCheckpoint()
     )
-    labels = core.select("id", F.col("id").alias("cluster_id")).localCheckpoint()
-    for _ in range(16):  # clump-bounded diameter; converges in ~4 rounds
-        neigh = (
-            ce.join(labels, ce.dst == labels.id)
-            .groupBy("src")
-            .agg(F.min("cluster_id").alias("nmin"))
-        )
-        new = (
-            labels.join(neigh, labels.id == neigh.src, "left")
-            .select(
-                "id",
-                F.least("cluster_id", F.coalesce("nmin", F.col("cluster_id"))).alias(
-                    "cluster_id"
-                ),
-                (F.coalesce("nmin", F.col("cluster_id")) < F.col("cluster_id")).alias(
-                    "_changed"
-                ),
-            )
-            .localCheckpoint()
-        )
-        changed = new.agg(F.max("_changed")).first()[0]
-        labels = new.select("id", "cluster_id")
-        if not changed:
-            break
-    else:
-        # r7 ADVICE: the oracle's recursive CTE always reaches the
-        # fixpoint — a silently-unconverged cap would hash WRONG, not
-        # error.  Fail loudly instead.
-        raise RuntimeError(
-            "geo_dbscan_grid: hash-min label propagation did not "
-            "converge within 16 rounds — raise the round cap (a "
-            "cluster's min-label propagation distance exceeds it)"
-        )
+    labels = min_label_components(core, ce, halve=False).select(
+        F.col("n").alias("id"), F.col("comp").alias("cluster_id")
+    )
     border = (
         pairs.join(labels.withColumnRenamed("id", "dst"), "dst")
         .join(core.withColumnRenamed("id", "src"), "src", "left_anti")

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cobradb_spark.io import load_table
+from cobradb_spark.operators.cc import min_label_components
 from cobradb_spark.operators.knn import BROADCAST_BYTES_LIMIT
 from cobradb_spark.registry import register
 
@@ -538,7 +539,6 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sf0.1) and its components are the "duplicate cluster" shape a dedup
 # pipeline consumes (pairs -> groups -> keep one per group).
 _CC_MIN_SUPPORT = 2
-_CC_MAX_ITERS = 50
 
 _CC_EDGE_SQL = f"""
 items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
@@ -569,105 +569,26 @@ SELECT c.part_id, c.comp_id, s.comp_size
 FROM comp c JOIN sizes s USING (comp_id)
 """,
     doc="Connected components of the strong co-purchase graph (part pairs "
-    f"sharing >= {_CC_MIN_SUPPORT} orders). Complements dedup_cluster_cc "
-    "(queries/mlprep.py), which runs plain min-propagation on dedup "
-    "candidate graphs of diameter ~3: THIS operator handles general "
-    "graphs — at sf0.001 the strong graph is one 200-node component and "
-    "at sf0.01 a 1860-node sparse giant — where plain propagation needs "
-    "O(diameter) rounds; path halving cuts that to O(log). "
-    "Algorithm: iterative min-label propagation with path halving — each "
-    "round takes the min component id over self + neighbors (one join + "
-    "partial-agg on the pinned, pre-partitioned edge list), then jumps "
-    "comp <- comp[comp] (a self-join on the |V|-row label table), so label "
-    "trees halve every round and convergence is O(log diameter) rounds, "
-    "checked by a changed-row count and loudly bounded at "
-    f"{_CC_MAX_ITERS} iterations. Labels localCheckpoint every round: "
-    "persist() alone caches DATA but the LOGICAL plan still nests (the "
-    "halving self-join doubles it per round — measured 2s/4.9s/28s/429s "
-    "analysis blowup by round 4 at sf0.01), so the lineage itself must "
-    "be truncated — the iterative-loop discipline Spark needs; edges "
-    "never re-shuffle. The oracle computes "
-    "the same components via DuckDB's recursive transitive closure, "
-    "feasible because strong edges are sparse. Output: (part_id, min-id "
-    "component label, component size) — all integers, hash-exact. At "
-    "100 TB the same loop runs unchanged: every round is one shuffle join "
-    "+ one hash agg over edge/label tables, no driver state beyond the "
-    "changed-count scalar.",
+    f"sharing >= {_CC_MIN_SUPPORT} orders) — at sf0.001 one 200-node "
+    "component, at sf0.01 a 1860-node sparse giant, so plain min "
+    "propagation would need O(diameter) rounds. Algorithm: the shared "
+    "operators/cc.py operator (also behind dedup_cluster_cc, "
+    "geo_dbscan_grid and dedup_near_cluster_keep_best): hash-min label "
+    "propagation with path halving — each round one join + partial-agg on "
+    "the checkpointed edge list, then comp <- comp[comp] on the |V|-row "
+    "label table, so convergence is O(log diameter) rounds; labels "
+    "localCheckpoint every round and the round cap raises. The oracle "
+    "computes the same components via DuckDB's recursive transitive "
+    "closure, feasible because strong edges are sparse. Output: (part_id, "
+    "min-id component label, component size) — all integers, hash-exact.",
     tags=("graph",),
 )
 def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cobradb_spark.operators.rank import pin_cache
-
     strong = _strong_pairs(spark, sf_dir)
-    edges = pin_cache(
-        strong.select(F.col("p1").alias("src"), F.col("p2").alias("dst")).union(
-            strong.select(F.col("p2").alias("src"), F.col("p1").alias("dst"))
-        )
+    edges = strong.select(F.col("p1").alias("src"), F.col("p2").alias("dst")).union(
+        strong.select(F.col("p2").alias("src"), F.col("p1").alias("dst"))
     )
-    # localCheckpoint (eager) truncates the LOGICAL lineage each round —
-    # persist() alone is not enough: the halving self-join references the
-    # previous round's plan twice, so the un-truncated plan doubles per
-    # round and Catalyst analysis time grows exponentially (measured
-    # 2s/4.9s/28s/429s per round by round 4 at sf0.01 with persist-only).
-    labels = (
-        edges.select(F.col("src").alias("n")).distinct()
-        .select("n", F.col("n").alias("comp"))
-        .localCheckpoint()
-    )
-    # PROBED AND REJECTED (r15, verdict item 1) — both round-halving
-    # levers measured worse than this one-hop r14 shape:
-    # (a) doubling the path-HALVING hop (comp <- s[s[s[n]]]): round
-    #     count stayed 7/7 at sf0.1 — convergence here is
-    #     neighbor-propagation-bound, not tree-compression-bound, so
-    #     the extra |V|-row self-join per round bought nothing;
-    # (b) TWO neighbor-min hops per round (labels travel two edges per
-    #     checkpoint): rounds did drop 7 -> 4, but the hop-1 subtree is
-    #     referenced twice in the round plan (hop-2's build side AND
-    #     probe side) and Catalyst re-executes it — fresh-JVM
-    #     interleaved A/B at sf0.1: ref 5.1/5.9/7.0 s vs two-hop
-    #     6.7/8.8/9.5 s, median 1.4x WORSE.
-    for _ in range(_CC_MAX_ITERS):
-        nbr_min = (
-            edges.join(labels, edges["src"] == labels["n"])
-            .groupBy(F.col("dst").alias("n2"))
-            .agg(F.min("comp").alias("nbr_comp"))
-        )
-        # carry the pre-round label through the halving join so the
-        # convergence test is a plain filter over the checkpointed rows
-        # — the old jumped><labels re-join cost an extra shuffle-join
-        # job per round (~0.25 s x 7 rounds at sf0.1, r14 A/B: 8.1 ->
-        # 6.6 s median with the HOF edge build)
-        stepped = (
-            labels.join(nbr_min, labels["n"] == F.col("n2"), "left")
-            .select(
-                "n",
-                F.col("comp").alias("old"),
-                F.least(
-                    "comp", F.coalesce("nbr_comp", F.col("comp"))
-                ).alias("comp"),
-            )
-        )
-        # path halving: comp <- comp's own current label
-        l2 = stepped.select(
-            F.col("n").alias("cn"), F.col("comp").alias("ccomp")
-        )
-        jumped = (
-            stepped.join(l2, stepped["comp"] == l2["cn"])
-            .select(
-                "n",
-                F.col("ccomp").alias("comp"),
-                (F.col("ccomp") != F.col("old")).alias("_ch"),
-            )
-            .localCheckpoint()
-        )
-        changed = jumped.filter("_ch").count()
-        labels = jumped.select("n", "comp")
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"connected components did not converge in {_CC_MAX_ITERS} rounds"
-        )
+    labels = min_label_components(None, edges)
     sizes = labels.groupBy("comp").agg(F.count("*").alias("comp_size"))
     return (
         labels.join(sizes, "comp")

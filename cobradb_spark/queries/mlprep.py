@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from cobradb_spark.buckets import bucket as _bucket
 from cobradb_spark.buckets import bucket_sql as _bucket_sql
 from cobradb_spark.io import load_table
+from cobradb_spark.operators.cc import min_label_components
 from cobradb_spark.registry import register
 
 
@@ -244,10 +245,11 @@ FROM reach GROUP BY src
     "MinHash/SimHash banding: candidate pairs (here: shared 30-char prefix or "
     "suffix fingerprint, over documents plus two generations of mutated copies "
     "so components have diameter 3) must be transitively merged before picking "
-    "one survivor per cluster. Spark side: hash-min label propagation to "
-    "fixpoint (each round: min label over neighbors, persist, converge check — "
-    "the Pregel/GraphX formulation; at 100 TB swap in large-star/small-star to "
-    "bound skew on giant components). Oracle: DuckDB recursive-CTE reachability.",
+    "one survivor per cluster. Spark side: the shared operators/cc.py "
+    "operator — hash-min label propagation (no path halving at this "
+    "diameter), labels localCheckpoint'd every round, a loud error at "
+    "the round cap; at 100 TB swap in large-star/small-star to bound "
+    "skew on giant components. Oracle: DuckDB recursive-CTE reachability.",
 )
 def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = load_table(spark, sf_dir, "documents").filter(F.col("n_chars") >= 80).select(
@@ -288,43 +290,10 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     edges = half.union(
         half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).persist()
-    labels = docs.select("doc_id", F.col("doc_id").alias("component_id")).persist()
-    for _ in range(12):  # diameter bound; converges in ~3 rounds here
-        neigh = (
-            edges.join(labels, edges.dst == labels.doc_id)
-            .groupBy("src")
-            .agg(F.min("component_id").alias("nmin"))
-        )
-        # One action per round: the changed flag rides along in the update
-        # DataFrame, so materializing the cache and testing convergence is
-        # a single job (no separate old-vs-new join).
-        new = (
-            labels.join(neigh, labels.doc_id == neigh.src, "left")
-            .select(
-                "doc_id",
-                F.least(
-                    "component_id", F.coalesce("nmin", F.col("component_id"))
-                ).alias("component_id"),
-                (F.coalesce("nmin", F.col("component_id")) < F.col("component_id")).alias(
-                    "_changed"
-                ),
-            )
-            .persist()
-        )
-        changed = new.agg(F.max("_changed")).first()[0]
-        labels.unpersist()
-        labels = new
-        if not changed:
-            break
-    edges.unpersist()
-    from cobradb_spark.operators.rank import pin
-
-    # the final labels cache must outlive this function (the caller still
-    # has to materialize the result) — hand it to the shared pin registry
-    # so harnesses release it after collection
-    pin(labels)
-    return labels.select("doc_id", "component_id")
+    )
+    return min_label_components(docs.select("doc_id"), edges, halve=False).select(
+        F.col("n").alias("doc_id"), F.col("comp").alias("component_id")
+    )
 
 
 @register(

@@ -97,104 +97,6 @@ def _load() -> None:
 # EXACT — after it, EVERY oracle-carrying key has a driver hash row
 # (437/437 green latest rows) and the only keys with no row at all are
 # the two rows-only ANN-hi points.
-#
-# Round 13 window (_DRIVER_PRIORITY below): slots 1-6 the r13-new keys
-# (text_char_entropy, stream_state_store_read, multimodal_magic_sniff,
-# pipeline_curate_multimodal, join_asof_forward,
-# analytics_stickiness_dau_mau — each locally hash-EXACT at sf0.01
-# under tools/check.py --plain), then the r4-era refresh staged last
-# round (_R13_REFRESH minus the three keys displaced to _R14_REFRESH
-# to make room) — exactly 50 slots, after which the only keys with
-# evidence older than r5 are the three displaced r4-era keys, staged
-# first for r14.  The r12
-# staging tuples below are kept verbatim: the monotone staging test
-# asserts against them and the r12 ledger they produced.
-#
-# Round 12 window (previous round), which executed the r11-staged
-# plan (r11 VERDICT items 2+3+6):
-#   * slot 1: pipeline_curate_corpus — the one r12-new key (end-to-end
-#     corpus curation composition; full DuckDB oracle).
-#   * slots 2-48: _R12_REFRESH — the 47 keys whose latest driver
-#     evidence was r2/r3 (all of E/F/G, most D/H/K, scan_csv_tsv,
-#     scan_json_lines).  After this window, no key's evidence predates
-#     r4.
-#   * slots 49-50: sim_ann_ivf_hi / sim_ann_ivf_pq_hi — the ONLY two
-#     registry keys with no driver row of any kind.  Rows-only by
-#     design (recall-graded companions hash-passed r11); spending two
-#     window slots on `no_oracle` rows (the J2/J4 r8 pattern)
-#     completes the 443/443 driver ledger (r11 VERDICT item 2).
-# Every oracle-carrying window key is locally EXACT at sf0.01 under
-# tools/check.py --window.  (_DRIVER_PRIORITY itself is assembled from
-# the named stage tuples below so the window cannot drift from the
-# staging lists the tests assert against.)
-
-# r12-new keys (the never-driver-checked drain head): every
-# oracle-carrying key added during r12 must be appended here AND given
-# a window slot; tests/test_registry.py asserts the recomputed
-# never-checked set stays a subset of this tuple, so new keys cannot
-# silently miss the drain path.
-_R12_NEW: tuple[str, ...] = (
-    "pipeline_curate_corpus",
-)
-
-# Rows-only keys deliberately spending window slots this round (driver
-# records `no_oracle` rows — completes the 443-key ledger).
-_R12_ROWSONLY: tuple[str, ...] = ("sim_ann_ivf_hi", "sim_ann_ivf_pq_hi")
-
-# The r3-era refresh executed by this round's window (kept as a named
-# tuple for the staging-integrity test and the r13 plan below).
-_R12_REFRESH: tuple[str, ...] = (
-    "join_lateral_topk", "join_null_safe", "join_outer_left_right_full", "join_self_hierarchy", "join_semi",
-    "join_shuffle_hash_hint", "join_shuffle_large",
-    "agg_approx_distinct", "scan_csv_tsv", "agg_conditional", "agg_first_last_ordered", "agg_grouping_sets", "agg_having", "agg_percentiles", "agg_stats", "array_higher_order", "conditional_null", "date_parts_trunc", "embed_vector_norm", "hash_reaction_dedup",
-    "json_extract_nested", "limit_offset", "map_ops", "math_suite",
-    "scan_json_lines", "set_except", "set_intersect", "set_union_all",
-    "set_union_distinct", "sort_multikey_nulls", "str_fuzzy_match",
-    "str_normalize_ids", "str_split_compartment", "text_stats",
-    "text_top_terms", "topk_global", "udaf_pandas_grouped_agg",
-    "udf_grouped_map_normalize", "udf_pandas_scalar", "udf_scalar_python",
-    "udtf_expand", "win_lag_lead", "win_nth_first_last",
-    "win_ntile_pctrank", "win_range_frame", "win_rank_topk_pergroup",
-    "win_running_frame",
-)
-
-# Staged r13 refresh plan (as executed): 44 of the 47 r4-era keys —
-# ts_autocorr, text_token_count, and text_unigram_perplexity were
-# displaced into _R14_REFRESH as the 4th-6th r13-new keys landed,
-# keeping the window at exactly 50.
-_R13_REFRESH: tuple[str, ...] = (
-    "agg_bitmap_distinct_rollup", "agg_collect_synonyms",
-    "agg_heavy_hitters", "agg_histogram_quantile_merge",
-    "agg_hll_intersect_estimate", "agg_hll_sketch_merge", "agg_pivot",
-    "analytics_copurchase_pairs", "analytics_rolling_distinct_users",
-    "array_ops", "cohort_retention", "decontam_ngram_overlap",
-    "dedup_cluster_cc", "dedup_cosine_near", "dedup_exact_hash",
-    "dedup_ngram_jaccard", "dedup_repeated_spans", "dedup_simhash",
-    "dedup_sorted_neighborhood", "dedup_url_canonical",
-    "embed_kmeans_cluster", "embed_quantize_int8",
-    "etl_dedup_incremental", "events_anomaly_mad",
-    "events_anomaly_zscore", "funnel_conversion", "funnel_time_bounded",
-    "join_bloom_prefilter", "join_interval_overlap",
-    "reshape_transpose", "reshape_unpivot", "segment_rfm",
-    "sessionize_events", "sim_cosine_topk", "str_regexp_extract_all",
-    "text_bpe_pair_counts", "text_feature_hashing",
-    "text_fingerprint_winnow", "text_inverted_index", "text_lang_id",
-    "text_pii_redact", "text_quality_score", "text_repetition_stats",
-    "text_tfidf_topk",
-)
-
-# r13-new keys (the never-driver-checked drain head): every
-# oracle-carrying key added during r13 must be appended here AND given
-# a window slot; tests/test_registry.py asserts the recomputed
-# never-checked set stays a subset of this tuple.
-_R13_NEW: tuple[str, ...] = (
-    "text_char_entropy",
-    "stream_state_store_read",
-    "multimodal_magic_sniff",
-    "pipeline_curate_multimodal",
-    "join_asof_forward",
-    "analytics_stickiness_dau_mau",
-)
 
 # r14-new keys (the never-driver-checked drain head for r14): the
 # embeddings-curation composition (r13 VERDICT item 3).  The _graded

@@ -1,8 +1,9 @@
 """Schema-cache invalidation (r14 verdict item 7 / ADVICE).
 
-_FILE_SCHEMA_CACHE is keyed on (realpath, mtime_ns, size): a file
-rewritten in-process must be re-inferred, not read with the stale
-cached schema.
+_FILE_SCHEMA_CACHE is keyed on realpath with the (mtime_ns, size) the
+schema was inferred at: a file rewritten in-process must be re-inferred,
+not read with the stale cached schema, and the rewrite must replace the
+path's entry rather than add one.
 """
 
 from __future__ import annotations
@@ -12,7 +13,7 @@ import os
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from cobradb_spark.io import load_table
+from cobradb_spark.io import _FILE_SCHEMA_CACHE, load_table
 
 
 def test_rewritten_file_reinfers_schema(spark, tmp_path):
@@ -43,3 +44,8 @@ def test_rewritten_file_reinfers_schema(spark, tmp_path):
         "c_custkey", "c_name", "c_extra",
     ], "rewritten parquet must be re-inferred, not served a stale schema"
     assert df2.count() == 1
+    # the rewrite replaced the path's entry instead of adding a second one
+    real = os.path.realpath(path)
+    assert [v[2].names for k, v in _FILE_SCHEMA_CACHE.items() if k == real] == [
+        ["c_custkey", "c_name", "c_extra"]
+    ]

@@ -772,7 +772,7 @@ AUDITS = [
         ["CartesianProduct", "BroadcastNestedLoopJoin", "BatchEvalPython"],
         "final labels join their component sizes; the iterative rounds "
         "behind the localCheckpoint each ran one edge-label join + one "
-        "hash agg (audited in code, queries/graph.py)",
+        "hash agg (audited in code, operators/cc.py)",
     ),
     (
         "geo_grid_radius_join",
