@@ -2,45 +2,45 @@
 
 Runs the six headline queries (matching the DuckDB-floor metrics in
 BASELINE.md §2) at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-one shared local[$SPARK_GRAFT_CPUS] session.  Per query: one untimed
-warmup (codegen/JIT), then 3 timed runs, median reported.  Results are
-materialized through the noop sink so the full plan executes without
-collect/serialization cost.
+one shared local[$SPARK_GRAFT_CPUS] session.  Per query
+(tools/timing.py's time_key): one untimed warmup (codegen/JIT), then 3
+timed runs, median reported.  Results are materialized through the noop
+sink so the full plan executes without collect/serialization cost.
 
 A second track (r5 verdict item 8) covers the full 22-shape TPC-H-style
 SQL suite (q1 = the agg_basic pricing summary + the 21 sql_* keys), so
 regressions outside the six headline queries surface in the per-round
 artifact too.  Same warmup + 3-run-median protocol per query; the suite
 total lands in `tpch_suite_seconds` / per-query in `tpch_queries`.
+`steal_jiffies` is the host's /proc/stat steal delta over both tracks'
+runs: a reading taken while co-tenants steal CPU shows it.
 
-A third artifact (r7 verdict item 4) pins environmental drift: two
-consecutive rounds showed uniform ~10-25% slowdowns on UNTOUCHED
-queries (0.58x -> 0.69x headline, 1.07x -> 1.17x TPC-H vs frozen
-numbers measured in different sessions), so a single absolute reading
-is no longer trustworthy as a regression signal.  The `ab` block runs
-an INTERLEAVED A/B — the previous round's frozen commit (git worktree)
-vs HEAD in fresh JVMs via tools/bench_once.py — so both variants see
-the same machine conditions and the ratio is environment-free.  Two
-r13-VERDICT de-confounds (three consecutive rounds read headline > 1
-with the excess entirely in the FIRST JVM of a session): (1) one
-DISCARDED WARMUP PAIR runs first — recorded in `warmup_discarded` for
-transparency, excluded from the medians — so one-time session costs
-(JIT profile seeding, OS page cache for parquet + imports) are paid
-before any measured run; (2) the measured pairs ALTERNATE side order
-(REF,HEAD then HEAD,REF ...) so neither side systematically runs
-first.  Fail-soft: any git/subprocess problem degrades to
-"ab": {"error": ...} without touching the primary numbers.  Tunables:
-SPARK_GRAFT_AB=0 disables, SPARK_GRAFT_AB_REF overrides the frozen
-commit, SPARK_GRAFT_AB_PAIRS the measured pair count (default 4 — an
-EVEN count, so the alternation is exactly balanced; an odd count would
-leave one side first in a majority of pairs and reintroduce a residual
-order bias).
+A third artifact pins environmental drift, which made single absolute
+readings untrustworthy as a regression signal (r7: uniform ~10-25%
+slowdowns on untouched queries).  The `ab` block runs an INTERLEAVED A/B
+of a reference commit (git worktree) against the working tree, in fresh
+JVMs via tools/bench_once.py, so both sides see the same machine
+conditions.  The reference is HEAD when `git status --porcelain --
+cobradb_spark` is non-empty (the uncommitted engine work is the change
+under test), otherwise HEAD~1.  One DISCARDED WARMUP PAIR runs first
+(kept in `warmup_discarded`, excluded from the medians) so one-time
+session costs (JIT profile seeding, OS page cache) are paid before any
+measured run, and the measured pairs ALTERNATE side order (REF,HEAD then
+HEAD,REF ...) so neither side systematically runs first (r13: the
+excess of three headline > 1 readings sat entirely in each session's
+first JVM).  Fail-soft: any git/subprocess problem degrades to
+"ab": {"error": ...} without touching the primary numbers.
+
+Knobs: SPARK_GRAFT_SF_DIR the data directory; SPARK_GRAFT_AB=0 disables
+the A/B; SPARK_GRAFT_AB_REF overrides the reference commit;
+SPARK_GRAFT_AB_PAIRS the measured pair count (default 4: an EVEN count
+balances the alternation exactly).
 
 Prints TWO JSON lines (last complete line wins): the primary payload
 immediately —
   {"metric": "suite_seconds", "value": N, "unit": "sec",
    "queries": {...}, "sf": ...,
-   "tpch_suite_seconds": M, "tpch_queries": {...}}
+   "tpch_suite_seconds": M, "tpch_queries": {...}, "steal_jiffies": J}
 — then (unless SPARK_GRAFT_AB=0) the SAME payload re-emitted with the
 `ab` block added:
   {..., "ab": {"ref": sha, "ref_runs": [...], "head_runs": [...],
@@ -57,85 +57,35 @@ import os
 import statistics
 import subprocess
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from cobradb_spark import registry
-from cobradb_spark.operators.rank import release_rank_caches
 from cobradb_spark.session import get_spark
-
-HEADLINE = {
-    "q_pricing_summary": "agg_basic",
-    "q_join_topn": "join_topn_flagship",
-    "q_window_rank": "win_rank_topk_pergroup",
-    "q_sessionize": "stream_session_window",
-    "q_cosine_topk": "sim_cosine_topk",
-    "q_grouping_sets": "agg_grouping_sets",
-}
-
-
-def materialize(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
+from tools.timing import HEADLINE, steal_jiffies, time_key, tpch_labels
 
 
 def _timed_suite(spark, qs, sf_dir, labels: dict[str, str]) -> dict[str, float]:
-    results: dict[str, float] = {}
-    for label, name in labels.items():
-        fn = qs[name].fn
-        materialize(fn(spark, sf_dir))  # warmup: codegen + page cache
-        release_rank_caches()
-        times = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            materialize(fn(spark, sf_dir))
-            times.append(time.perf_counter() - t0)
-            release_rank_caches()
-        results[label] = round(statistics.median(times), 4)
-    return results
+    return {
+        label: round(statistics.median(time_key(spark, qs[name].fn, sf_dir, 3)), 4)
+        for label, name in labels.items()
+    }
 
 
-# The previous round's artifacts commit: its tree carries that round's
-# final engine code, so "REF vs HEAD" is exactly "last round vs now".
-# Auto-detected from the driver's "round N: ..." commit convention so
-# the ref rolls forward each round without a manual edit; the hardcoded
-# fallback covers detection failure.
-_AB_FALLBACK_REF = "c1f74af"  # round 7 artifacts
 _REPO = os.path.dirname(os.path.abspath(__file__))
 
 
-def _detect_prev_round_ref() -> str:
-    """Newest 'round N:' artifacts commit that is NOT HEAD itself and
-    whose tree differs from HEAD's.  r8 ADVICE: a re-run after the
-    CURRENT round's artifacts commit lands would otherwise resolve REF
-    to that commit and silently A/B HEAD against itself (ratio ~1.0,
-    masking regressions) — guard on both sha equality and tree
-    equality, falling back to the next-older round commit."""
-    try:
-        out = subprocess.run(
-            ["git", "-C", _REPO, "log", "--grep", "^round [0-9]*:",
-             "-n", "2", "--format=%h"],
-            capture_output=True,
-            text=True,
-            timeout=30,
-            check=True,
-        )
-        head = subprocess.run(
-            ["git", "-C", _REPO, "rev-parse", "--short", "HEAD"],
-            capture_output=True, text=True, timeout=30, check=True,
-        ).stdout.strip()
-        for ref in out.stdout.split():
-            if ref == head:
-                continue  # self-compare: take the next-older round
-            same_tree = subprocess.run(
-                ["git", "-C", _REPO, "diff", "--quiet", ref, "HEAD"],
-                capture_output=True, timeout=30,
-            ).returncode == 0
-            if not same_tree:
-                return ref
-        return _AB_FALLBACK_REF
-    except Exception:  # noqa: BLE001 — fail-soft by contract
-        return _AB_FALLBACK_REF
+def _git(*args: str) -> str:
+    return subprocess.run(
+        ["git", "-C", _REPO, *args], capture_output=True, text=True, timeout=30, check=True
+    ).stdout.strip()
+
+
+def _ab_ref() -> str:
+    """HEAD when the engine has uncommitted changes (they are the change
+    under test), otherwise HEAD~1; as a short sha."""
+    dirty = _git("status", "--porcelain", "--", "cobradb_spark")
+    return _git("rev-parse", "--short", "HEAD" if dirty else "HEAD~1")
 
 
 def _bench_once(repo_root: str, sf_dir: str) -> dict[str, float]:
@@ -153,7 +103,7 @@ def interleaved_ab(sf_dir: str) -> dict:
     """Fresh-JVM A/B: one discarded warmup pair, then `pairs` measured
     pairs with alternating side order; medians + ratio."""
     try:
-        ref = os.environ.get("SPARK_GRAFT_AB_REF") or _detect_prev_round_ref()
+        ref = os.environ.get("SPARK_GRAFT_AB_REF") or _ab_ref()
         pairs = int(os.environ.get("SPARK_GRAFT_AB_PAIRS", "4"))
         wt = f"/tmp/bench_ab_{ref}"
     except Exception as e:  # noqa: BLE001 — fail-soft by contract
@@ -209,22 +159,20 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark("bench")
     qs = registry.all_queries()
+    steal0 = steal_jiffies()
     results = _timed_suite(spark, qs, sf_dir, HEADLINE)
-    total = round(sum(results.values()), 4)
-    # 22-shape TPC-H track: q1's shape is the agg_basic pricing summary;
-    # the rest are the sql_* flagship keys.
-    tpch_labels = {"q1": "agg_basic"}
-    tpch_labels.update({n: n for n in sorted(qs) if n.startswith("sql_")})
-    tpch = _timed_suite(spark, qs, sf_dir, tpch_labels)
+    tpch = _timed_suite(spark, qs, sf_dir, tpch_labels(qs))
+    steal = steal_jiffies() - steal0
     spark.stop()  # free the JVM before the A/B subprocesses spin theirs
     payload = {
         "metric": "suite_seconds",
-        "value": total,
+        "value": round(sum(results.values()), 4),
         "unit": "sec",
         "queries": results,
         "sf": float(sf),
         "tpch_suite_seconds": round(sum(tpch.values()), 4),
         "tpch_queries": tpch,
+        "steal_jiffies": steal,
     }
     # Emit the primary numbers IMMEDIATELY (and flush): if a harness
     # timeout kills the slower A/B phase below, the last complete JSON

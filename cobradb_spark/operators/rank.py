@@ -32,9 +32,10 @@ from pyspark.sql import functions as F
 #
 # RELEASE CONTRACT (round-4 ADVICE — this is module API, not an
 # implementation detail): every pin()/pin_cache() leaks a persisted
-# frame until release_rank_caches() runs.  The harnesses tools/check.py,
-# bench.py, tools/bench_once.py, tools/op_sweep.py and
-# tools/scaling_probe.py call it after each query's result is collected;
+# frame until release_rank_caches() runs.  tools/check.py, perfbench and
+# tools/timing.py's time_key (through which bench.py, tools/bench_once.py,
+# tools/op_sweep.py and tools/scaling_probe.py time every key) call it
+# after each query's result is materialized; no query calls it, and
 # __spark_entry__ does NOT, so in a session driven through it pinned
 # frames stay persisted.  Any caller that materializes its result
 # outside those harnesses must call release_rank_caches() itself once

@@ -204,4 +204,8 @@ def run_to_memory(
         finally:
             q.stop()
             unload_state_stores(spark)
-    return spark.table(name)
+    # The frame resolves the sink's view eagerly, so the view can go: left
+    # registered, every replay's output stays in the session catalog.
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out

@@ -563,10 +563,7 @@ FROM res, nn GROUP BY nn.n
 def agg_quantile_exact_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
-    from cobradb_spark.operators.rank import (
-        global_rank_with_total,
-        release_rank_caches,
-    )
+    from cobradb_spark.operators.rank import global_rank_with_total
 
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_extendedprice").alias("x"), "l_orderkey", "l_linenumber"
@@ -589,7 +586,6 @@ def agg_quantile_exact_global(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("rn", "x")
         .collect()  # bounded: at most 2 * len(_QUANTILES) rows
     }
-    release_rank_caches()
     out = {}
     for q, (lo, f) in targets.items():
         xlo = got[lo]

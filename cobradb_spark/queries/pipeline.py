@@ -40,6 +40,7 @@ from cobradb_spark.lexicons import ES as _ES
 from cobradb_spark.lexicons import hits as lex_hits
 from cobradb_spark.lexicons import hits_sql as _hits_duck
 from cobradb_spark.ngrams import TRIGRAMS_SQL, word_trigrams
+from cobradb_spark.queries.textops import QUALITY_SQL, quality_score
 from cobradb_spark.registry import register
 
 _QUALITY_MIN = 0.35  # same composite score as text_quality_score
@@ -70,9 +71,7 @@ WITH s1 AS (
 ), s3 AS (
   SELECT doc_id, text,
          CAST(len(str_split(text, ' ')) AS BIGINT) AS n_words,
-         round(least(len(str_split(text, ' ')) / 100.0, 1.0) * 0.5
-               + least((length(text) - len(str_split(text, ' ')) + 1.0)
-                       / len(str_split(text, ' ')) / 8.0, 1.0) * 0.5, 6) AS quality,
+         {QUALITY_SQL} AS quality,
          {_hits_duck(_EN)} AS en_hits,
          {_hits_duck(_DE)} AS de_hits,
          {_hits_duck(_ES)} AS es_hits
@@ -176,20 +175,13 @@ def pipeline_curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (3) quality + language gate — pure codegen, same formulas as
     # text_quality_score / text_lang_id.
     words = F.split("text", " ")
-    n_words = F.size(words).cast("long")
-    awl = (F.length("text") - n_words + 1.0) / n_words
-    quality = F.round(
-        F.least(n_words / 100.0, F.lit(1.0)) * 0.5
-        + F.least(awl / 8.0, F.lit(1.0)) * 0.5,
-        6,
-    )
 
     s3f = (
         s2.select(
             "doc_id",
             "text",
-            n_words.alias("n_words"),
-            quality.alias("quality"),
+            F.size(words).cast("long").alias("n_words"),
+            quality_score().alias("quality"),
             lex_hits(words, _EN).alias("en_hits"),
             lex_hits(words, _DE).alias("de_hits"),
             lex_hits(words, _ES).alias("es_hits"),

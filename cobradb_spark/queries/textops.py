@@ -11,7 +11,7 @@ bit-reproducible across engines.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cobradb_spark import lexicons
@@ -378,9 +378,28 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scored.withColumn("lang_pred", pred)
 
 
+# The quality composite, shared with pipeline_curate_corpus.  It is
+# rounded to 6 places by the explicit floor(x * 1e6 + 0.5) / 1e6 on both
+# engines, not by round(): Spark's round() rounds the double's decimal
+# string half-up while DuckDB's rounds the binary value, so they split on
+# e.g. 40 words in 244 chars, 0.2 + 5.125 / 16, which prints as the tie
+# 0.5203125 but sits just below it.
+QUALITY_SQL = """floor((least(len(str_split(text, ' ')) / 100.0, 1.0) * 0.5
+              + least((length(text) - len(str_split(text, ' ')) + 1.0)
+                      / len(str_split(text, ' ')) / 8.0, 1.0) * 0.5) * 1e6 + 0.5) / 1e6"""
+
+
+def quality_score() -> Column:
+    words = F.split("text", " ")
+    n_words = F.size(words).cast("long")
+    awl = (F.length("text") - n_words + 1.0) / n_words
+    x = F.least(n_words / 100.0, F.lit(1.0)) * 0.5 + F.least(awl / 8.0, F.lit(1.0)) * 0.5
+    return F.floor(x * 1e6 + 0.5) / 1e6
+
+
 @register(
     "text_quality_score",
-    oracle="""
+    oracle=f"""
 SELECT doc_id,
        CAST(len(str_split(text, ' ')) AS BIGINT) AS n_words,
        round((length(text) - len(str_split(text, ' ')) + 1.0)
@@ -388,9 +407,7 @@ SELECT doc_id,
        round(CAST(len(list_filter(str_split(text, ' '),
              x -> x IN ('the', 'a', 'and', 'of', 'to', 'in', 'is'))) AS DOUBLE)
              / len(str_split(text, ' ')), 6) AS stopword_ratio,
-       round(least(len(str_split(text, ' ')) / 100.0, 1.0) * 0.5
-             + least((length(text) - len(str_split(text, ' ')) + 1.0)
-                     / len(str_split(text, ' ')) / 8.0, 1.0) * 0.5, 6) AS quality
+       {QUALITY_SQL} AS quality
 FROM documents
 """,
     doc="Text quality scoring (length / word-shape / stopword-ratio composite) — "
@@ -403,13 +420,12 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_words = F.size(words).cast("long")
     awl = (F.length("text") - n_words + 1.0) / n_words
     stop_ratio = F.size(F.filter(words, lambda x: x.isin(*_EN))).cast("double") / n_words
-    quality = F.least(n_words / 100.0, F.lit(1.0)) * 0.5 + F.least(awl / 8.0, F.lit(1.0)) * 0.5
     return d.select(
         "doc_id",
         n_words.alias("n_words"),
         F.round(awl, 6).alias("avg_word_len"),
         F.round(stop_ratio, 6).alias("stopword_ratio"),
-        F.round(quality, 6).alias("quality"),
+        quality_score().alias("quality"),
     )
 
 

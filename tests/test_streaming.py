@@ -403,3 +403,13 @@ def test_unload_state_stores_idempotent_and_rerunnable(spark, sf_dir):
     second = fn(spark, sf_dir).collect()
     assert sorted(first) == sorted(second)
     assert len(first) > 0
+
+
+def test_replay_leaves_no_sink_view(spark, sf_dir):
+    """run_to_memory drops its memory-sink view once the result frame is
+    resolved: the frame still collects, and no stream_sink_* view is left
+    in the session catalog to hold every replay's output."""
+    rows = registry.get_query("stream_sessionize_stateful").fn(spark, sf_dir).collect()
+    assert rows
+    views = [t.name for t in spark.catalog.listTables() if t.name.startswith("stream_sink_")]
+    assert views == []

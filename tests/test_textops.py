@@ -534,6 +534,41 @@ def test_pipeline_curate_corpus_adversarial_micro_corpora(spark, tmp_path):
     assert {2, 4, 6, 12} <= survivors  # clean docs flow all the way through
 
 
+def test_quality_rounds_binary_tie_like_oracle(spark, tmp_path):
+    """40 words in 244 chars score 0.2 + 5.125 / 16, which prints as the
+    decimal tie 0.5203125 but sits just below it in binary.  Spark's
+    round() rounded it up and DuckDB's down; both quality keys now use
+    floor(x * 1e6 + 0.5) / 1e6 on both engines and agree."""
+    import duckdb
+    import pandas as pd
+
+    from cobradb_spark.registry import get_query
+
+    tie = " ".join(["the quality"] * 15 + ["the pipeline"] * 5)
+    assert (len(tie.split(" ")), len(tie)) == (40, 244)
+    texts = {0: "held out eval slice text with other words", 1: tie}
+    pdf = pd.DataFrame(
+        {
+            "doc_id": list(texts),
+            "text": list(texts.values()),
+            "lang": ["en"] * len(texts),
+            "source": ["synthetic"] * len(texts),
+            "n_chars": [len(t) for t in texts.values()],
+        }
+    )
+    sf = str(tmp_path)
+    pdf.to_parquet(f"{sf}/documents.parquet", index=False)
+    con = duckdb.connect()
+    con.register("pdf", pdf)
+    con.execute("CREATE VIEW documents AS SELECT * FROM pdf")
+    for key in ("text_quality_score", "pipeline_curate_corpus"):
+        q = get_query(key)
+        got = {r.doc_id: r.quality for r in q.fn(spark, sf).collect()}
+        want = dict(con.execute(f"SELECT doc_id, quality FROM ({q.oracle})").fetchall())
+        assert got[1] == want[1] == 0.520312, key
+        assert got == want, key
+
+
 def test_char_entropy_matches_python(spark, sf_dir):
     """Engine entropy == from-first-principles python entropy, and the
     uniform-distribution invariant H == log2(k) holds on a synthetic doc."""

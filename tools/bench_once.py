@@ -4,14 +4,18 @@ Usage: python tools/bench_once.py <repo_root> <sf_dir> [query,query,...]
 
 With the optional third argument, runs ONLY the named registry keys
 (one untimed warmup + 3 timed runs each, median) and prints
-{"queries": {name: sec}} — the single-query interleaved-A/B probe the
-q19 (r12) / q8 (r14) quiet re-reads use.
+{"queries": {name: sec}, "steal_jiffies": J} — the single-query
+interleaved-A/B probe the q19 (r12) / q8 (r14) quiet re-reads use.
 
-Imports the engine from <repo_root> (which may be a git worktree of a
-FROZEN commit — the code under test), runs one untimed warmup pass and
-one timed pass of the headline + TPC-H tracks, and prints one JSON line
-{"headline": sec, "tpch": sec}.  The runner itself always ships from
-HEAD; only the engine code is swapped, so an old commit needs no
+Imports the engine from <repo_root> (which may be a git worktree of an
+older commit — the code under test), runs one untimed warmup and one
+timed run of every key of the headline and TPC-H tracks, and prints one
+JSON line {"headline": sec, "tpch": sec, "steal_jiffies": J}, each
+track the sum of its keys' timed runs.  `steal_jiffies` is the host's
+/proc/stat steal delta over the runs.  The runner and its timing core
+(tools/timing.py, loaded by file path from this file's directory, so
+the older checkout needs none) always ship from the checkout holding
+this file; only the engine code is swapped, so an old commit needs no
 bench-protocol compatibility beyond the stable registry API
 (all_queries / release_rank_caches / get_spark — present since r1).
 
@@ -24,56 +28,47 @@ BASELINE.md round-7/8 notes).
 
 from __future__ import annotations
 
+import importlib.util
 import json
+import os
+import statistics
 import sys
-import time
+
+
+def _load_timing():
+    path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "timing.py")
+    spec = importlib.util.spec_from_file_location("bench_timing", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
 
 
 def main() -> None:
     repo_root, sf_dir = sys.argv[1], sys.argv[2]
     only = sys.argv[3].split(",") if len(sys.argv) > 3 else None
+    timing = _load_timing()
     sys.path.insert(0, repo_root)
 
     from cobradb_spark import registry
-    from cobradb_spark.operators.rank import release_rank_caches
     from cobradb_spark.session import get_spark
 
-    headline = [
-        "agg_basic", "join_topn_flagship", "win_rank_topk_pergroup",
-        "stream_session_window", "sim_cosine_topk", "agg_grouping_sets",
-    ]
     qs = registry.all_queries()
-    tpch = ["agg_basic"] + sorted(n for n in qs if n.startswith("sql_"))
     spark = get_spark("bench-ab")
-
-    def one_pass(names: list[str]) -> float:
-        t_total = 0.0
-        for name in names:
-            t0 = time.perf_counter()
-            qs[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            t_total += time.perf_counter() - t0
-            release_rank_caches()
-        return t_total
+    steal0 = timing.steal_jiffies()
 
     if only:
-        import statistics
-
-        per: dict[str, float] = {}
-        for name in only:
-            one_pass([name])  # warmup: codegen + page cache
-            per[name] = round(
-                statistics.median(one_pass([name]) for _ in range(3)), 4
-            )
-        print(json.dumps({"queries": per}))
-        spark.stop()
-        return
-
-    one_pass(headline)  # warmup: codegen + page cache
-    one_pass(tpch)
-    out = {
-        "headline": round(one_pass(headline), 4),
-        "tpch": round(one_pass(tpch), 4),
-    }
+        out = {
+            "queries": {
+                name: round(statistics.median(timing.time_key(spark, qs[name].fn, sf_dir, 3)), 4)
+                for name in only
+            }
+        }
+    else:
+        out = {}
+        for track, labels in (("headline", timing.HEADLINE), ("tpch", timing.tpch_labels(qs))):
+            total = sum(timing.time_key(spark, qs[name].fn, sf_dir, 1)[0] for name in labels.values())
+            out[track] = round(total, 4)
+    out["steal_jiffies"] = timing.steal_jiffies() - steal0
     print(json.dumps(out))
     spark.stop()
 

@@ -15,13 +15,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from cobradb_spark import registry
-from cobradb_spark.operators.rank import release_rank_caches
 from cobradb_spark.session import get_spark
+from tools.timing import time_key
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -33,15 +32,9 @@ def main() -> int:
     spark = get_spark("op-sweep")
     results: dict[str, object] = {}
     for i, key in enumerate(keys):
-        fn = qs[key].fn
         spark.sparkContext.setJobDescription(f"sweep:{key}")
         try:
-            fn(spark, SF).write.format("noop").mode("overwrite").save()
-            release_rank_caches()
-            t0 = time.perf_counter()
-            fn(spark, SF).write.format("noop").mode("overwrite").save()
-            results[key] = round(time.perf_counter() - t0, 3)
-            release_rank_caches()
+            results[key] = round(time_key(spark, qs[key].fn, SF, 1)[0], 3)
         except Exception as e:  # noqa: BLE001 — sweep must finish
             results[key] = {"error": str(e)[:200]}
         if (i + 1) % 25 == 0:
